@@ -9,7 +9,6 @@ default stays local for tests and single-node runs.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 
@@ -26,13 +25,8 @@ from pyspark.sql import DataFrame
 # (scan_bytes) or a checkpoint's stored bytes (materialized_bytes, ~10x
 # the parquet size for narrow rows); 1 GiB keeps every toy/test scale on
 # the lazy path and engages the cut where a duplicated pass costs whole
-# node-minutes. Parameterized for cluster tuning.
-EAGER_MIN_BYTES_ENV = "SPARK_GRAFT_EAGER_MIN_BYTES"
-_DEFAULT_EAGER_MIN_BYTES = 1 << 30
-
-
-def eager_min_bytes() -> int:
-    return int(os.environ.get(EAGER_MIN_BYTES_ENV, _DEFAULT_EAGER_MIN_BYTES))
+# node-minutes.
+EAGER_MIN_BYTES = 1 << 30
 
 
 def scan_bytes(df: DataFrame) -> int:
@@ -84,9 +78,9 @@ def materialize_gated(
     while being plan-verified wins at cluster scale).
 
     ``small``: explicit gate decision (e.g. from a counted loop frame);
-    None derives it from :func:`scan_bytes` vs :func:`eager_min_bytes`."""
+    None derives it from :func:`scan_bytes` vs ``EAGER_MIN_BYTES``."""
     if small is None:
-        small = scan_bytes(df) < eager_min_bytes()
+        small = scan_bytes(df) < EAGER_MIN_BYTES
     if small:
         return df
     return materialize(df, checkpoint_dir)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peskas_timor_data_pipeline_spark.llm.ckpt import (
-    eager_min_bytes,
+    EAGER_MIN_BYTES,
     materialize,
     materialized_bytes,
 )
@@ -71,7 +71,7 @@ def connected_components(
     # inputs stop paying a driver-blocking job per round. None (reliable
     # checkpoints, evicted blocks) reads as big: cluster runs stay eager.
     sz = materialized_bytes(edges)
-    eager = sz is None or sz >= eager_min_bytes()
+    eager = sz is None or sz >= EAGER_MIN_BYTES
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("nbr_min"))
@@ -253,7 +253,13 @@ def connected_components_star(
 
     Use :func:`connected_components` for near-dup clusters (tiny
     diameters, constant rounds); prefer this form for adversarial /
-    unknown topologies — long chains, huge sparse components."""
+    unknown topologies — long chains, huge sparse components.
+
+    Multi-executor runs must pass ``checkpoint_dir``: the initial edge
+    set is a checkpoint that every round reads back (the node set derives
+    from it after convergence), and a default local checkpoint lives in
+    executor block managers, so losing one executor mid-run aborts the
+    job instead of recomputing."""
     canon = (
         pairs.select(
             F.least(F.col(id_a), F.col(id_b)).alias("a"),
@@ -279,7 +285,7 @@ def connected_components_star(
     # (bounded plans, single edge-scale pass per star phase at scale) but
     # only block on checkpoint jobs when the edge set is actually big.
     sz = materialized_bytes(edges)
-    eager = sz is None or sz >= eager_min_bytes()
+    eager = sz is None or sz >= EAGER_MIN_BYTES
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(

@@ -17,10 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from peskas_timor_data_pipeline_spark.llm.ckpt import (
-    materialize,
-    materialize_many,
-)
+from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -1038,7 +1035,7 @@ def containment_pairs(
     # measured), so the cut engages on upstream size only. Gate reads the
     # checkpointed grams' REAL stored bytes, not an estimate.
     from peskas_timor_data_pipeline_spark.llm.ckpt import (
-        eager_min_bytes,
+        EAGER_MIN_BYTES,
         materialized_bytes,
     )
 
@@ -1050,7 +1047,7 @@ def containment_pairs(
         "gh",
     )
     _gsz = materialized_bytes(grams)
-    if _gsz is None or _gsz >= eager_min_bytes():
+    if _gsz is None or _gsz >= EAGER_MIN_BYTES:
         gram_df = materialize(gram_df, checkpoint_dir)
     a = gram_df.select(F.col(id_col).alias("id_a"), "gh")
     b = gram_df.select(F.col(id_col).alias("id_b"), "gh")
@@ -1394,27 +1391,27 @@ def store_band_rows(
     n_hashes: int,
     band_size: int,
     prefix_len: int = 2,
-    include_sigs: bool = True,
 ) -> DataFrame:
-    """The persistable band-row layout of a signature store:
-    (store_id[, h0..h{n-1}], band_key, band_pfx) where ``band_pfx`` is
-    the leading ``prefix_len`` hex chars of the band key — md5 output, so
-    the 16^len prefix values split the store uniformly (256 partitions at
-    the default). Write it hive-partitioned on ``band_pfx`` (one
-    repartition on the prefix keeps files per partition bounded) and the
-    steady-state matcher (:func:`match_signature_store` with
-    ``store_bands``) prunes its store-side scan to the partitions an
+    """The band-row layout of a signature store:
+    (store_id, h0..h{n-1}, band_key, band_pfx, band_size) where
+    ``band_pfx`` is the leading ``prefix_len`` hex chars of the band key —
+    md5 output, so the 16^len prefix values split the store uniformly
+    (256 partitions at the default). Write it hive-partitioned on
+    ``band_pfx`` (one repartition on the prefix keeps files per partition
+    bounded) and the steady-state matcher (:func:`match_signature_store`
+    with ``store_bands``) prunes its store-side scan to the partitions an
     incoming batch actually collides with, and never re-derives the
     store's bands — the two costs that otherwise grow linearly with store
-    size per micro-batch.
+    size per micro-batch. Without a persisted artifact the matcher builds
+    these same rows on the fly (``prefix_len=0``).
 
-    ``include_sigs`` denormalizes the signature slots INTO each band row
-    (n_bands-fold duplication of the h columns — a few hundred bytes per
-    doc, nothing next to corpus text): the slot comparison then runs on
-    the already-pruned band rows and the match never touches the separate
-    signature store at all, making per-batch store IO proportional to the
-    COLLIDING store fraction with no residual full-store scan."""
-    carry = tuple(f"h{j}" for j in range(n_hashes)) if include_sigs else ()
+    The signature slots are denormalized INTO each band row (n_bands-fold
+    duplication of the h columns — a few hundred bytes per doc, nothing
+    next to corpus text): the slot comparison runs on the already-pruned
+    band rows and the match never touches the separate signature store,
+    so per-batch store IO is proportional to the COLLIDING store
+    fraction with no residual full-store scan."""
+    carry = tuple(f"h{j}" for j in range(n_hashes))
     rows = band_rows(store_sigs, id_col, n_hashes, band_size, carry=carry)
     if id_col != "store_id":
         rows = rows.withColumnRenamed(id_col, "store_id")
@@ -1428,6 +1425,24 @@ def store_band_rows(
         # validate against
         "band_size", F.lit(band_size)
     )
+
+
+def signature_width(store: DataFrame) -> int:
+    """Number of ``h*`` signature slots a signature store (or its band
+    rows) carries — the store's MinHash geometry, read from the schema
+    alone (no job). The store is the single source of truth for it:
+    callers derive ``n_hashes`` here instead of taking it as an option, so
+    a store built at another width can never be compared on a slot
+    subset. Raises ``ValueError`` for a frame with no h* columns."""
+    import re
+
+    n = sum(1 for c in store.columns if re.fullmatch(r"h\d+", c))
+    if n == 0:
+        raise ValueError(
+            "signature store carries no h* signature columns "
+            f"(columns: {store.columns})"
+        )
+    return n
 
 
 def match_signature_store(
@@ -1447,153 +1462,124 @@ def match_signature_store(
     signature-slot agreement alone (agree/n_hashes is an unbiased Jaccard
     estimator), so the store needs signatures only — no shingle sets.
 
-    Shape: band keys for both sides (store bands are computable once and
-    persistable too), one equi-join on band_key (batch x store bucket
-    mates only — never a cross product), a distinct on candidate pairs,
-    then one join per side back to the signature frames for the slot
-    comparison. Output is the best store match per batch doc
-    (max agreement, min store id on ties) with agreement >= ``min_agree``
-    slots; batch docs with no candidate or only weak ones emit nothing —
-    they are the genuinely-new content that proceeds into the corpus.
+    Shape: band rows for both sides, the store's carrying its signature
+    slots (:func:`store_band_rows`); one equi-join on band_key (batch x
+    store bucket mates only — never a cross product), a dedup on the
+    candidate pair, one join back to the batch signatures, and the slot
+    comparison against the store slots already on the band rows. Output
+    is the best store match per batch doc (max agreement, min store id on
+    ties) with agreement >= ``min_agree`` slots; batch docs with no
+    candidate or only weak ones emit nothing — they are the
+    genuinely-new content that proceeds into the corpus.
 
     Returns (batch_id, store_id, n_agree, est_jaccard_ppm) with
     est_jaccard_ppm = n_agree * 1e6 div n_hashes (exact integer).
 
-    ``store_bands`` (from :func:`store_band_rows`, usually read back from
-    a hive-partitioned parquet artifact) switches on the banded-store
-    path: the store's band rows are NOT re-derived, and when the frame
-    carries a ``band_pfx`` partition column the store-side scan is pruned
-    to the prefixes the batch actually produces — the batch's distinct
-    prefixes are a bounded driver-side set (at most 16^prefix_len values,
-    256 at the default — a policy aggregate, not a data-path collect), so
-    the IN filter lands in the scan's PartitionFilters and non-colliding
-    store partitions contribute zero IO. Pruning is lossless: candidates
-    require band_key equality, and equal keys share every prefix.
+    The store's band rows come from one of two sources; scoring is the
+    same for both. ``store_bands`` (from :func:`store_band_rows`, usually
+    read back from a hive-partitioned parquet artifact) is validated
+    against its recorded ``band_size`` and, when it carries a non-empty
+    ``band_pfx`` partition column, its scan is pruned to the prefixes the
+    batch actually produces — the batch's distinct prefixes are a bounded
+    driver-side set (at most 16^prefix_len values, 256 at the default — a
+    policy aggregate, not a data-path collect), so the IN filter lands in
+    the scan's PartitionFilters and non-colliding store partitions
+    contribute zero IO. Pruning is lossless: candidates require band_key
+    equality, and equal keys share every prefix. Without ``store_bands``
+    the rows are built from ``store_sigs`` on the fly (full store scan
+    and re-band per call); with it, ``store_sigs`` is never read.
 
-    When the band rows also carry the signature slots (store_band_rows
-    ``include_sigs``, the default artifact layout), the slot comparison
-    runs directly on the pruned band rows and ``store_sigs`` is never
-    scanned — without this, the candidate->signature join still reads
-    the full signature store every batch.
+    Store geometry is checked here, up front and from schemas only:
+    the store's h* width must equal ``n_hashes`` ("signature geometry
+    mismatch"), ``n_hashes // band_size`` must be at least one band
+    ("zero bands" — zero bands emit zero keys and every batch doc would
+    silently pass as new), and a persisted store's ``band_size`` must
+    equal the caller's ("band geometry mismatch" — different band sizes
+    give disjoint md5 keys). A persisted band store without h* columns
+    cannot be scored and raises ``ValueError``.
     """
-    import re
-
     from pyspark.sql.window import Window
 
-    # MATERIALIZE the signature frames that feed TWO consumers each (r11):
-    # the batch signatures feed both their band rows and the slot-
-    # comparison join — unmaterialized, the whole upstream minhash
-    # (shingle explode + 16-slot aggregate) was computed twice per
-    # micro-batch. Same for the store side on the unbanded path; on the
-    # banded path store_sigs is never scanned (the carried band rows
-    # replace it), so it is deliberately NOT materialized there. The two
-    # sides are INDEPENDENT corpus-scale passes, so the unbanded path
-    # checkpoints them as concurrent jobs (guide §2.6): the store pass
-    # back-fills executors idled by the batch pass's straggler tail.
-    # Measured r12: gating these off at toy scale moved the work into the
-    # action, which recomputed the minhash once per consumer (duplicated
-    # aggregate subtrees do NOT share stages under AQE) — total flat to
-    # slightly worse. The checkpoints stay unconditional.
-    carried = False
-    if store_bands is None:
-        batch_sigs, store_sigs = materialize_many([batch_sigs, store_sigs])
-    else:
-        batch_sigs = materialize(batch_sigs)
+    store_n = signature_width(
+        store_sigs if store_bands is None else store_bands
+    )
+    if store_n != n_hashes:
+        raise ValueError(
+            f"signature geometry mismatch: store has {store_n} hash slots, "
+            f"caller asked for n_hashes={n_hashes}"
+        )
+    if n_hashes // band_size == 0:
+        raise ValueError(
+            f"band_size={band_size} exceeds the store's signature width "
+            f"n_hashes={n_hashes}: zero bands would match nothing"
+        )
+
+    # MATERIALIZE the batch signatures (r11): they feed both their band
+    # rows and the slot-comparison join — unmaterialized, the whole
+    # upstream minhash (shingle explode + 16-slot aggregate) was computed
+    # twice per micro-batch. The store side has ONE consumer (its band
+    # rows) on either path, so it is deliberately not cut. Measured r12:
+    # gating this off at toy scale moved the work into the action, which
+    # recomputed the minhash once per consumer (duplicated aggregate
+    # subtrees do NOT share stages under AQE) — total flat to slightly
+    # worse. The checkpoint stays unconditional.
+    batch_sigs = materialize(batch_sigs)
     bb = band_rows(batch_sigs, id_col, n_hashes, band_size).withColumnRenamed(
         id_col, "batch_id"
     )
     if store_bands is None:
-        sb = band_rows(store_sigs, id_col, n_hashes, band_size).withColumnRenamed(
-            id_col, "store_id"
-        )
+        # built here, so the geometry is known: nothing to probe or prune
+        sb = store_band_rows(store_sigs, id_col, n_hashes, band_size, prefix_len=0)
     else:
         sb = store_bands
-        hcols = sorted(
-            (c for c in sb.columns if re.fullmatch(r"h\d+", c)),
-            key=lambda c: int(c[1:]),
-        )
-        if hcols and len(hcols) != n_hashes:
-            raise ValueError(
-                f"signature geometry mismatch: store band rows carry "
-                f"{len(hcols)} hash slots, caller asked for "
-                f"n_hashes={n_hashes}"
-            )
-        carried = bool(hcols)
         # ONE limit-1 probe job reads both geometry columns (was two
         # jobs — measurable fixed overhead per micro-batch at toy scale)
         probe_cols = [c for c in ("band_size", "band_pfx") if c in sb.columns]
-        probe = sb.select(*probe_cols).first() if probe_cols else None
-        if probe is not None and "band_size" in probe_cols:
-            # the artifact carries its build geometry; a batch banded at
-            # a different band_size would produce disjoint md5 keys and
-            # silently match nothing — refuse instead
-            if probe["band_size"] != band_size:
-                raise ValueError(
-                    f"band geometry mismatch: store bands were built at "
-                    f"band_size={probe['band_size']}, caller asked for "
-                    f"{band_size}"
-                )
-        keep = ["store_id", "band_key", *hcols]
-        if "band_pfx" in sb.columns:
-            pfx_probe = probe["band_pfx"] if probe is not None else None
-            if pfx_probe is None or len(pfx_probe) == 0:
-                # empty store, or a small store written at prefix_len=0
-                # (band_prefix_len policy; hive reads the '' partition
-                # value back as NULL): nothing to prune
-                sb = sb.select(*keep)
-            else:
-                plen = len(pfx_probe)
-                # the heavy batch lineage (minhash) is already cut above;
-                # bb re-derives narrowly (band md5 + ×n_bands explode)
-                # from the checkpointed signatures for both the prefix
-                # set and the join — no second cut needed (r11)
-                pfx = sorted(
-                    r[0]
-                    for r in bb.select(
-                        F.substring("band_key", 1, plen).alias("p")
-                    )
-                    .distinct()
-                    .collect()
-                )
-                sb = sb.filter(F.col("band_pfx").isin(pfx)).select(*keep)
-        else:
-            sb = sb.select(*keep)
-        if carried:
-            # disambiguate from the batch signature's h columns
-            sb = sb.select(
-                "store_id",
-                "band_key",
-                *[F.col(f"h{j}").alias(f"__sh{j}") for j in range(n_hashes)],
+        row = sb.select(*probe_cols).first() if probe_cols else None
+        probe = row.asDict() if row is not None else {}
+        if probe.get("band_size", band_size) != band_size:
+            raise ValueError(
+                f"band geometry mismatch: store bands were built at "
+                f"band_size={probe['band_size']}, caller asked for "
+                f"{band_size}"
             )
-    if carried:
-        # slot comparison directly on the pruned band rows: the separate
-        # signature store is never read — per-batch store IO is the
-        # colliding band partitions, full stop
-        pairs = bb.join(sb, "band_key").dropDuplicates(["batch_id", "store_id"])
-        agree = sum(
-            F.when(F.col(f"ba.h{j}") == F.col(f"__sh{j}"), 1).otherwise(0)
-            for j in range(n_hashes)
-        )
-        scored = (
-            pairs.join(batch_sigs.alias("ba"),
-                       pairs["batch_id"] == F.col(f"ba.{id_col}"))
-            .select("batch_id", "store_id", agree.cast("int").alias("n_agree"))
-            .filter(F.col("n_agree") >= min_agree)
-        )
-    else:
-        cand = bb.join(sb, "band_key").select("batch_id", "store_id").distinct()
-        agree = sum(
-            F.when(F.col(f"ba.h{j}") == F.col(f"sa.h{j}"), 1).otherwise(0)
-            for j in range(n_hashes)
-        )
-        scored = (
-            cand.join(batch_sigs.alias("ba"),
-                      cand["batch_id"] == F.col(f"ba.{id_col}"))
-            .join(store_sigs.alias("sa"),
-                  cand["store_id"] == F.col(f"sa.{id_col}"))
-            .select("batch_id", "store_id", agree.cast("int").alias("n_agree"))
-            .filter(F.col("n_agree") >= min_agree)
-        )
+        pfx_probe = probe.get("band_pfx")
+        # empty store, or a small store written at prefix_len=0
+        # (band_prefix_len policy; hive reads the '' partition value back
+        # as NULL): nothing to prune
+        if pfx_probe:
+            plen = len(pfx_probe)
+            # the heavy batch lineage (minhash) is already cut above; bb
+            # re-derives narrowly (band md5 + ×n_bands explode) from the
+            # checkpointed signatures for both the prefix set and the
+            # join — no second cut needed (r11)
+            pfx = sorted(
+                r[0]
+                for r in bb.select(F.substring("band_key", 1, plen).alias("p"))
+                .distinct()
+                .collect()
+            )
+            sb = sb.filter(F.col("band_pfx").isin(pfx))
+    # store slots renamed apart from the batch signature's h columns
+    sb = sb.select(
+        "store_id",
+        "band_key",
+        *[F.col(f"h{j}").alias(f"__sh{j}") for j in range(n_hashes)],
+    )
+    # slot comparison directly on the band rows: the separate signature
+    # frame is never joined back — with a persisted store, per-batch
+    # store IO is the colliding band partitions, full stop
+    pairs = bb.join(sb, "band_key").dropDuplicates(["batch_id", "store_id"])
+    agree = sum(
+        F.when(F.col(f"ba.h{j}") == F.col(f"__sh{j}"), 1).otherwise(0)
+        for j in range(n_hashes)
+    )
+    scored = (
+        pairs.join(batch_sigs.alias("ba"),
+                   pairs["batch_id"] == F.col(f"ba.{id_col}"))
+        .select("batch_id", "store_id", agree.cast("int").alias("n_agree"))
+        .filter(F.col("n_agree") >= min_agree)
+    )
     w = Window.partitionBy("batch_id").orderBy(
         F.col("n_agree").desc(), F.col("store_id").asc()
     )

@@ -247,23 +247,24 @@ def dedup_incoming_slice(
     n_agree, est_jaccard_ppm) for the dedup audit trail.
 
     The signature geometry (``n_hashes``) is DERIVED from the store
-    artifact's h-columns rather than taken as a parameter — a caller
-    passing a different value than the store was built with would
-    silently compare a slot subset (or fail on missing columns); the
-    store schema is the single source of truth.
+    artifact's h-columns (llm/dedup.py::signature_width) rather than
+    taken as a parameter — a caller passing a different value than the
+    store was built with would silently compare a slot subset (or fail
+    on missing columns); the store schema is the single source of truth.
+    Every other geometry check (band_size vs the signature width and vs
+    the persisted band store) lives in match_signature_store.
 
     When the pipeline's ``band_store`` artifact exists (hive-partitioned
     band rows, built by the full run), the match uses it: the store's
     bands are not re-derived and the store-side scan prunes to the
     band-key prefixes the slice actually collides with — per-slice cost
     then tracks the COLLIDING store fraction, not total store size.
-    Falls back to on-the-fly banding for stores built before the
-    artifact existed.
+    Without it (stores built before the artifact existed) the matcher
+    builds the same band rows from the signature store on the fly.
     """
-    import re
-
     from peskas_timor_data_pipeline_spark.llm.dedup import (
         match_signature_store,
+        signature_width,
     )
     from peskas_timor_data_pipeline_spark.sources.io import (
         read_stage,
@@ -276,22 +277,7 @@ def dedup_incoming_slice(
         if resolve_latest(artifact_dir, "band_store", "parquet") is not None
         else None
     )
-    n_hashes = sum(
-        1 for c in store_sigs.columns if re.fullmatch(r"h\d+", c)
-    )
-    if n_hashes == 0:
-        raise ValueError(
-            "signature_store artifact carries no h* signature columns"
-        )
-    if n_hashes // band_size == 0:
-        # n_hashes // band_size bands: zero bands would emit zero band
-        # keys, so every slice doc would silently pass as new (e.g. a
-        # store built at minhash_signature's default n_hashes=6 against
-        # the default band_size=8)
-        raise ValueError(
-            f"band_size={band_size} exceeds the store's signature width "
-            f"n_hashes={n_hashes}: zero bands would match nothing"
-        )
+    n_hashes = signature_width(store_sigs)
     slice_sigs = minhash_signature(
         slice_df, "doc_id", "norm_text", n_hashes=n_hashes
     )

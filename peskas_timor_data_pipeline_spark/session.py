@@ -25,6 +25,22 @@ from pyspark.sql import SparkSession
 DEFAULT_TIMEZONE = "Asia/Dili"
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: min(24g, 3/8 of
+    physical RAM). local[N] is a single JVM, so "driver" memory is the
+    whole executor heap shared by N task threads — size it like an
+    executor, not a driver. 24g keeps GC pressure off the shuffle-heavy
+    dedup/LSH queries on a 128 GiB host; on a small host the 3/8 share
+    leaves room for the JVM's off-heap memory, the Python workers and
+    DuckDB in the same box (a fixed 24g heap on a 16 GiB, swap-less host
+    grew until the kernel killed the process)."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # sysconf unavailable
+        return "24g"
+    return f"{min(24 << 10, ram * 3 // 8 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "peskas-timor-pipeline",
     master: str | None = None,
@@ -58,11 +74,10 @@ def get_spark(
         # Python DataSource scans (sources/kobo_source.py) push id-range
         # predicates into the REST query; off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        # local[N] is a single JVM: "driver" memory is the whole executor
-        # heap shared by N task threads — size it like an executor, not a
-        # driver (the box has 128 GiB; 24g keeps GC pressure off the
-        # shuffle-heavy dedup/LSH queries without risking the host)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -234,7 +234,6 @@ def store_dedup_sink(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_hashes: int = 16,
     band_size: int = 8,
     k_shingle: int = 5,
     min_agree: int = 12,
@@ -269,17 +268,22 @@ def store_dedup_sink(
     bands: the equi-join reads only the band-prefix partitions the batch
     collides with, so per-batch store IO tracks the colliding fraction
     instead of total store size — the difference between O(store) and
-    O(batch) work per micro-batch on a crawl-scale store.
+    O(batch) work per micro-batch on a crawl-scale store. Without it the
+    matcher builds the store's band rows from ``store_sigs`` on the fly,
+    every micro-batch.
+
+    The signature width is read from the store's h* columns
+    (llm/dedup.py::signature_width), never passed in; the matcher refuses
+    a ``band_size`` wider than the signature or different from the
+    band store's recorded one, failing the micro-batch (and the query).
     """
     from pyspark.sql import functions as F
 
     from peskas_timor_data_pipeline_spark.llm.dedup import (
-        match_signature_store, minhash_signature,
+        match_signature_store, minhash_signature, signature_width,
     )
 
     def match_batch(batch: DataFrame, batch_id: int) -> None:
-        import re
-
         if not batch.take(1):
             return
         store = (
@@ -287,29 +291,10 @@ def store_dedup_sink(
             if isinstance(store_sigs, str)
             else store_sigs
         )
-        # The store schema is the single source of truth for signature
+        # the store schema is the single source of truth for signature
         # geometry (same contract as pipeline.corpus_pipeline.
-        # dedup_incoming_slice): a caller-supplied n_hashes that differs
-        # from the persisted store would silently compare a slot subset
-        # (wrong est_jaccard_ppm, missed matches) or fail every
-        # micro-batch on missing columns.
-        store_n = sum(
-            1 for c in store.columns if re.fullmatch(r"h\d+", c)
-        )
-        if store_n == 0:
-            raise ValueError(
-                "signature store carries no h* signature columns"
-            )
-        if store_n != n_hashes:
-            raise ValueError(
-                f"signature geometry mismatch: store has {store_n} hash "
-                f"slots, caller asked for n_hashes={n_hashes}"
-            )
-        if n_hashes // band_size == 0:
-            raise ValueError(
-                f"band_size={band_size} exceeds n_hashes={n_hashes}: "
-                "zero bands would match nothing"
-            )
+        # dedup_incoming_slice); the matcher checks the rest
+        n_hashes = signature_width(store)
         bsig = minhash_signature(batch, id_col, text_col, n_hashes, k_shingle)
         store_bands = (
             batch.sparkSession.read.parquet(band_store)

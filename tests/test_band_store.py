@@ -97,6 +97,38 @@ def test_banded_match_rejects_band_geometry_mismatch(spark, tmp_path):
         )
 
 
+def test_banded_match_rejects_band_store_without_signatures(spark, tmp_path):
+    """Scoring compares slots on the band rows, so a persisted band store
+    that carries no h* columns cannot be scored: it must be refused, not
+    silently fall back to a join against the signature frame."""
+    docs = _docs(spark, 10)
+    sigs = minhash_signature(docs, "doc_id", "text", 16, 5)
+    path = str(tmp_path / "bands_nosig")
+    (
+        store_band_rows(sigs, "doc_id", 16, 8)
+        .select("store_id", "band_key", "band_size", "band_pfx")
+        .write.mode("overwrite")
+        .partitionBy("band_pfx")
+        .parquet(path)
+    )
+    with pytest.raises(ValueError, match="no h\\* signature columns"):
+        match_signature_store(
+            sigs, sigs, "doc_id", 16, 8, 12,
+            store_bands=spark.read.parquet(path),
+        )
+
+
+def test_match_rejects_store_signature_width_mismatch(spark):
+    """With no band store the rows are built from store_sigs, whose width
+    must equal n_hashes — a narrower store would otherwise fail on missing
+    columns or compare a slot subset."""
+    docs = _docs(spark, 10)
+    sigs16 = minhash_signature(docs, "doc_id", "text", 16, 5)
+    sigs8 = minhash_signature(docs, "doc_id", "text", 8, 5)
+    with pytest.raises(ValueError, match="signature geometry mismatch"):
+        match_signature_store(sigs16, sigs8, "doc_id", 16, 8, 12)
+
+
 def test_band_store_artifact_and_incremental_slice(spark, tmp_path):
     """The corpus pipeline persists the band_store artifact
     hive-partitioned, and dedup_incoming_slice picks it up (same verdicts

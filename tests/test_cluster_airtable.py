@@ -173,35 +173,54 @@ def test_cluster_safe_split_never_straddles(spark):
     assert dist["train"] > 1600 and dist["val"] < 200 and dist["test"] < 200
 
 
-def test_connected_components_eager_gate_forced_big(spark, monkeypatch):
+def _assert_reliable_checkpoint_reads_as_big(spark, tmp_path):
+    """A reliable checkpoint (checkpoint_dir) leaves no block-manager
+    entry, so materialized_bytes reports None — which the CC size gates
+    read as big: passing checkpoint_dir forces the eager path."""
+    from peskas_timor_data_pipeline_spark.llm.ckpt import (
+        materialize,
+        materialized_bytes,
+    )
+
+    probe = materialize(spark.range(3), str(tmp_path))
+    assert materialized_bytes(probe) is None
+
+
+def test_connected_components_eager_gate_forced_big(spark, tmp_path):
     """The r12 size gate must not change labels: force the eager
-    (big-input) path via SPARK_GRAFT_EAGER_MIN_BYTES=0 and compare
-    against the default (lazy at test scale) path."""
-    monkeypatch.setenv("SPARK_GRAFT_EAGER_MIN_BYTES", "0")
+    (big-input) path with a reliable checkpoint_dir and compare against
+    the default (lazy at test scale) path."""
+    _assert_reliable_checkpoint_reads_as_big(spark, tmp_path)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
         "id_a long, id_b long",
     )
-    eager = {r.node: r.component for r in connected_components(pairs).collect()}
-    monkeypatch.delenv("SPARK_GRAFT_EAGER_MIN_BYTES")
+    eager = {
+        r.node: r.component
+        for r in connected_components(
+            pairs, checkpoint_dir=str(tmp_path)
+        ).collect()
+    }
     lazy = {r.node: r.component for r in connected_components(pairs).collect()}
     assert eager == lazy
     assert eager[1] == eager[4] == 1 and eager[20] == 20
 
 
-def test_star_components_eager_gate_forced_big(spark, monkeypatch):
+def test_star_components_eager_gate_forced_big(spark, tmp_path):
     from peskas_timor_data_pipeline_spark.llm.cluster import (
         connected_components_star,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_EAGER_MIN_BYTES", "0")
+    _assert_reliable_checkpoint_reads_as_big(spark, tmp_path)
     pairs = spark.createDataFrame(
         [(2, 4), (4, 5), (5, 6), (6, 1), (30, 31)], "id_a long, id_b long"
     )
     eager = {
-        r.node: r.component for r in connected_components_star(pairs).collect()
+        r.node: r.component
+        for r in connected_components_star(
+            pairs, checkpoint_dir=str(tmp_path)
+        ).collect()
     }
-    monkeypatch.delenv("SPARK_GRAFT_EAGER_MIN_BYTES")
     lazy = {
         r.node: r.component for r in connected_components_star(pairs).collect()
     }

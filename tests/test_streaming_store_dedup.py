@@ -82,44 +82,58 @@ def test_store_dedup_sink_matches_per_batch(spark, tmp_path):
     assert rows[103].micro_batch_id != rows[205].micro_batch_id
 
 
-def test_store_dedup_sink_rejects_geometry_mismatch(spark, tmp_path):
+def test_store_dedup_sink_derives_width_from_store(spark, tmp_path):
     """The persisted store's h* columns are the single source of truth for
-    signature geometry: a caller-supplied n_hashes that differs must fail
-    loudly, not silently compare a slot subset."""
-    import pytest
-
+    signature geometry: the sink takes no width option, so an 8-slot store
+    is matched at 8 slots and a recrawl of one of its docs lands."""
     from peskas_timor_data_pipeline_spark.llm.dedup import minhash_signature
     from peskas_timor_data_pipeline_spark.streaming.ingest import (
         store_dedup_sink,
         stream_landed_files,
     )
 
+    # texts far apart: 8 slots cannot separate near-identical bodies
+    texts = [
+        "alpha bravo charlie delta echo foxtrot " * 4,
+        "golf hotel india juliet kilo lima " * 4,
+        "mike november oscar papa quebec romeo " * 4,
+    ]
     store_docs = spark.createDataFrame(
-        [(i, f"stored corpus document body number {i} " * 4) for i in range(3)],
-        "doc_id long, text string",
+        list(enumerate(texts)), "doc_id long, text string"
     )
-    # store built at 8 slots; the sink below asks for the default 16
     minhash_signature(store_docs, "doc_id", "text", 8, 5).write.parquet(
         str(tmp_path / "store8")
     )
     landing = tmp_path / "landing"
     landing.mkdir()
-    _write_batch(landing, "b1.jsonl", [{"doc_id": 1, "text": "anything " * 8}])
+    _write_batch(
+        landing,
+        "b1.jsonl",
+        [
+            {"doc_id": 101, "text": texts[1]},
+            {"doc_id": 102, "text": "completely novel fresh content " * 4},
+        ],
+    )
 
+    out = str(tmp_path / "out")
     q = store_dedup_sink(
         stream_landed_files(spark, str(landing), SCHEMA),
         str(tmp_path / "store8"),
-        str(tmp_path / "out"),
+        out,
         checkpoint=str(tmp_path / "ckpt"),
+        band_size=4,
+        min_agree=6,
     ).start()
-    with pytest.raises(Exception, match="geometry mismatch"):
-        q.awaitTermination(120)
-        raise AssertionError("query should have failed")
+    q.awaitTermination(120)
+
+    verdicts = spark.read.parquet(out).collect()
+    assert [(v.batch_id, v.store_id, v.n_agree, v.est_jaccard_ppm)
+            for v in verdicts] == [(101, 1, 8, 1_000_000)]
 
 
 def test_store_dedup_sink_rejects_zero_bands(spark, tmp_path):
-    """band_size > n_hashes would build zero bands and silently match
-    nothing; the sink refuses up front."""
+    """band_size wider than the store's 6-slot signature would build zero
+    bands and silently match nothing; the sink refuses instead."""
     import pytest
 
     from peskas_timor_data_pipeline_spark.llm.dedup import minhash_signature
@@ -143,7 +157,6 @@ def test_store_dedup_sink_rejects_zero_bands(spark, tmp_path):
         str(tmp_path / "store6"),
         str(tmp_path / "out"),
         checkpoint=str(tmp_path / "ckpt"),
-        n_hashes=6,
         band_size=8,
     ).start()
     with pytest.raises(Exception, match="zero bands"):
